@@ -778,7 +778,7 @@ def run_ccnet_prefilter(
     rotation loop in ONE call: after the cut, the fitted LM tables +
     thresholds publish as a versioned gate model
     (``publish_ccnet_gate_model``), so every in-flight
-    ``start_versioned_ccnet_gate_stream`` sink swaps to this fit at
+    ``start_gate_stream`` sink swaps to this fit at
     its next micro-batch boundary; the manifest records the
     ``published_version``. ``tables`` injects the pre-fit
     ``[unigram, order2, ...]`` list (the

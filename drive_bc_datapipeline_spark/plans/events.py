@@ -3662,7 +3662,6 @@ def streaming_etl_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{root}/src",
         f"{root}/sink",
         f"{root}/ckpt",
-        available_now=True,
         timestamp_format=_STREAM_TS_FMT,
     )
     q.awaitTermination(300)
@@ -3729,7 +3728,6 @@ def streaming_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_name=qname,
         gap=f"{SESSION_GAP_MIN} minutes",
         watermark="24 hours",
-        available_now=True,
         timestamp_format=_STREAM_TS_FMT,
     )
     q.awaitTermination(300)
@@ -3782,7 +3780,6 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{root}/src",
         f"{root}/ckpt",
         query_name=qname,
-        available_now=True,
         timestamp_format=_STREAM_TS_FMT,
     )
     q.awaitTermination(300)
@@ -3836,7 +3833,6 @@ def streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim,
         f"{root}/ckpt",
         query_name=qname,
-        available_now=True,
         timestamp_format=_STREAM_TS_FMT,
     )
     q.awaitTermination(300)

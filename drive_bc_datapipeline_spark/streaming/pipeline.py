@@ -1,4 +1,8 @@
-"""Structured Streaming pipelines (SURVEY §2 J1/J2).
+"""Structured Streaming pipelines (SURVEY §2): event streams (J1/J2,
+J4, J6, J7, J9), the exactly-once commit-log sink (J10), and the
+document gate stream (J11-J14), whose one entry point
+``start_gate_stream`` serves every gate family over the versioned
+model protocol.
 
 Reference parity: etl-events.py — Kinesis source → binary payload
 parsed with an explicit JSON schema → explode the events array →
@@ -104,7 +108,6 @@ def start_etl_stream(
     source_dir: str,
     sink_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     timestamp_format: str | None = None,
 ) -> StreamingQuery:
     """J1: stream → clean → foreachBatch skip-empty parquet append,
@@ -124,12 +127,12 @@ def start_etl_stream(
             .parquet(sink_dir)
         )
 
-    writer = cleaned.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        cleaned.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_windowed_counts_stream(
@@ -138,7 +141,6 @@ def start_windowed_counts_stream(
     checkpoint_dir: str,
     query_name: str = "hourly_counts",
     watermark: str = "2 hours",
-    available_now: bool = True,
     timestamp_format: str | None = None,
 ) -> StreamingQuery:
     """J2: watermark + tumbling 1-hour window count per event_type.
@@ -161,15 +163,14 @@ def start_windowed_counts_stream(
             "cnt",
         )
     )
-    writer = (
+    return (
         agg.writeStream.outputMode("complete")
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_stateful_user_stats_stream(
@@ -177,7 +178,6 @@ def start_stateful_user_stats_stream(
     source_dir: str,
     checkpoint_dir: str,
     query_name: str = "user_stats",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Custom stateful operator via ``applyInPandasWithState``: running
     per-user (n_events, total_value, last_ts) maintained in the state
@@ -237,15 +237,14 @@ def start_stateful_user_stats_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
+    return (
         stats.writeStream.outputMode("update")
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_stream_stream_join(
@@ -254,7 +253,6 @@ def start_stream_stream_join(
     checkpoint_dir: str,
     query_name: str = "click_purchase_join",
     max_gap_minutes: int = 60,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """J6: watermarked stream-stream inner join — each purchase joined
     to the same user's clicks in the preceding ``max_gap_minutes``.
@@ -293,15 +291,14 @@ def start_stream_stream_join(
         ),
         "inner",
     ).select("event_id", F.col("p_user").alias("user_id"), "purchase_ts", "click_ts")
-    writer = (
+    return (
         joined.writeStream.outputMode("append")
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_enriched_stream(
@@ -310,7 +307,6 @@ def start_enriched_stream(
     dim_df: DataFrame,
     checkpoint_dir: str,
     query_name: str = "enriched",
-    available_now: bool = True,
     timestamp_format: str | None = None,
 ) -> StreamingQuery:
     """J7: stream-static enrichment — each micro-batch joins the
@@ -325,129 +321,14 @@ def start_enriched_stream(
         spark, source_dir, timestamp_format=timestamp_format
     ).dropna(subset=["ts"])
     enriched = raw.join(F.broadcast(dim_df), "user_id", "left")
-    writer = (
+    return (
         enriched.writeStream.outputMode("append")
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_tws_user_stats_stream(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    query_name: str = "tws_stats",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """J8: custom stateful operator on the transformWithState API —
-    the Spark 4 successor of ``applyInPandasWithState`` (J4): typed
-    state handles (value/list/map state), timers for time-based
-    eviction, and schema-evolvable state instead of one opaque tuple.
-    Same semantics as J4 (running per-user n/total/last_ts) so the two
-    APIs are directly comparable in this codebase.
-
-    Requires the RocksDB state store (the only provider implementing
-    the new state API) — which is what a 100 TB deployment runs anyway:
-    state spills to local SST files + changelog checkpointing, instead
-    of the default provider's executor-heap maps.
-
-    ENV GATE: the transformWithState worker protocol speaks protobuf;
-    raises ImportError with a pointer to J4 when ``google.protobuf``
-    is absent (as in this container). The J4 stream is the drop-in
-    fallback with identical semantics.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "transformWithStateInPandas needs the protobuf package "
-            "(worker protocol); use start_stateful_user_stats_stream "
-            "(J4, applyInPandasWithState) in this environment"
-        ) from exc
-
-    import pandas as pd  # local import: executors only
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", StringType()),
-            StructField("n_events", LongType()),
-            StructField("total_value", DoubleType()),
-            StructField("last_ts", TimestampType()),
-        ]
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "stats",
-                "n_events BIGINT, total_value DOUBLE, last_ts_us BIGINT",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total, last_us = (
-                self._state.get() if self._state.exists() else (0, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-                ts_max = pd.to_datetime(pdf["ts"]).max()
-                if ts_max is not pd.NaT:
-                    last_us = max(last_us, ts_max.value // 1000)
-            self._state.update((n, total, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "last_ts": [pd.Timestamp(last_us * 1000)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    # transformWithState requires RocksDB; the provider conf is
-    # session-wide, so capture and restore it after start() (the query
-    # snapshots confs at start) — otherwise every later streaming query
-    # in the session silently inherits RocksDB (same pattern as
-    # upsert_partitioned's partitionOverwriteMode handling).
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        raw = read_event_stream(spark, source_dir).dropna(subset=["ts"])
-        stats = raw.groupBy("user_id").transformWithStateInPandas(
-            RunningStats(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-        writer = (
-            stats.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)
 
 
 def start_session_window_stream(
@@ -457,7 +338,6 @@ def start_session_window_stream(
     query_name: str = "session_stats",
     gap: str = "30 minutes",
     watermark: str = "2 hours",
-    available_now: bool = True,
     timestamp_format: str | None = None,
 ) -> StreamingQuery:
     """J9: streaming session-window aggregation — the native
@@ -491,15 +371,14 @@ def start_session_window_stream(
             "total_value",
         )
     )
-    writer = (
+    return (
         agg.writeStream.outputMode("complete")
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -525,8 +404,9 @@ def start_session_window_stream(
 def commit_marker_path(sink_dir: str, batch_id: int) -> str:
     """THE one owner of the commit-log layout: the marker file whose
     existence means ``batch_id`` is fully committed into ``sink_dir``.
-    Consumed by the writer, the reader, and J11's pre-scoring probe —
-    a layout change here moves all three together."""
+    Consumed by the writer, the reader, and the gate writer's
+    pre-scoring probe — a layout change here moves all three
+    together."""
     import os
 
     return os.path.join(sink_dir, "_commits", str(batch_id))
@@ -606,82 +486,41 @@ def read_committed(spark: SparkSession, sink_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# J11 (r14 frontier) — the INCREMENTAL twin of the batch curation gate:
-# score each micro-batch of arriving documents with the broadcast E9
-# model and keep only rows clearing the E10-selected threshold,
-# written through the J10 exactly-once commit log. This is how a
-# 100 TB/day ingest keeps its training corpus current without nightly
-# full rescans: the model is driver-sized state (D-bounded weight
-# dict), scoring is the SAME E7 expression the batch gate uses
-# (broadcast weight join + per-doc mean + sigmoid — per-doc pure, so
-# streaming-over-batches equals the batch gate on the union, which the
-# test pins), and the sink's batch-id marker protocol closes
-# foreachBatch's at-least-once replay window. A replayed batch id
-# short-circuits on its marker BEFORE any scoring work re-runs.
+# Document gates — the INCREMENTAL twins of the batch curation gates.
+# Documents stream in, each micro-batch is cut by a FROZEN model fit on
+# the batch side, and survivors flow through the J10 exactly-once commit
+# log. Three gate families share one writer and one entry point,
+# ``start_gate_stream``:
+#
+# - J11 classifier: the E7 hashed-linear score (broadcast weight join +
+#   per-doc mean + sigmoid) cut at the E10-selected threshold.
+# - J12 CCNet: per-doc LM perplexity under the frozen reference LM
+#   (H49/H50/H52), cut at the frozen per-domain thresholds.
+# - J13 staged: run_staged_curation's filterable prefix (optional H51
+#   rule screen → CCNet cut → classifier gate) through ONE commit log.
+#
+# Scoring is per-doc pure, so streaming over batches equals the batch
+# gate on the union (test-pinned). The model is frozen per version on
+# purpose: CCNet thresholds are corpus-distribution quantiles, and
+# refitting per batch would make the cut depend on arrival order (DSIR
+# selection stays batch-side for the same reason). Not a
+# transformWithState job: the model is static per version and scoring
+# is stateless per doc, so foreachBatch + commit log is the whole
+# machine. A replayed batch id short-circuits on its marker BEFORE any
+# scoring work re-runs.
 # ---------------------------------------------------------------------------
 
-#: the J11 document-stream schema (the documents-table contract)
+#: the gate document-stream schema (the documents-table contract)
 DOC_STREAM_SCHEMA = "doc_id bigint, source string, text string"
-
-
-def _doc_stream_reader(
-    spark: SparkSession,
-    source_dir: str,
-    schema: str,
-    max_files_per_trigger: int | None,
-) -> DataFrame:
-    """The document file-stream source shared by the J11/J12/J13 gate
-    streams: explicit schema, optional per-trigger file cap (the
-    file-source equivalent of a per-shard read cap)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(source_dir)
-
-
-def _scored_gate_writer(sink_dir: str, kept_of_batch):
-    """The ONE copy of the gate-writer replay protocol shared by the
-    J11 classifier gate and the J12 CCNet gate (r15 review catch —
-    the scaffolding had been duplicated): marker probe FIRST (a
-    replayed committed batch must not build any scoring plan — base
-    would skip the write, but only after its isEmpty probe executed
-    the plan once), then persist the kept frame around base's
-    isEmpty probe + write so each fresh batch scores ONCE.
-
-    ``kept_of_batch(batch_df)`` supplies the gate: either a bare
-    DataFrame, or ``(DataFrame, aux)`` where ``aux`` is a tuple of
-    intermediate frames the builder persisted for intra-batch reuse —
-    they are unpersisted here alongside the kept frame (r15 ADVICE:
-    the staged writer's per-batch localCheckpoint blocks were never
-    released, accumulating executor storage over a long stream)."""
-    base = exactly_once_batch_writer(sink_dir)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        if os.path.exists(commit_marker_path(sink_dir, batch_id)):
-            return
-        out = kept_of_batch(batch_df)
-        kept, aux = out if isinstance(out, tuple) else (out, ())
-        kept = kept.persist()
-        try:
-            base(kept, batch_id)
-        finally:
-            kept.unpersist()
-            for frame in aux:
-                frame.unpersist()
-
-    return write_batch
 
 
 def _resolve_gate_threshold(
     threshold: float, cal_table: list | None, curve_bins: int | None
 ) -> float:
-    """THE one copy of the calibrated-handoff resolution shared by
-    the J11 and J13 stream starters (r15 review catch — it had been
-    duplicated, with the two writers resolving at different levels):
-    a calibrated threshold arrives WITH its calibration table and
-    bin convention or not at all; writers always receive raw."""
+    """THE one copy of the calibrated-handoff resolution: a calibrated
+    threshold arrives WITH its calibration table and bin convention or
+    not at all; the scorer always receives raw. Feeding a calibrated
+    threshold without the table would silently apply the wrong cut."""
     if cal_table is not None:
         from drive_bc_datapipeline_spark.operators.classifier import (
             calibrated_threshold_to_raw,
@@ -724,8 +563,8 @@ def _classifier_kept(
 ):
     """kept-of-batch builder for the E7 classifier gate — THE one
     copy of the scoring body, composed by J11 alone and by J13 after
-    the CCNet stage (r15 review catch: the body had been duplicated,
-    so a fix to one writer would not reach the other)."""
+    the CCNet stage. Kept rows keep every input column plus ``score``
+    — the audit trail a curation sink needs (why did this doc pass?)."""
     from drive_bc_datapipeline_spark.operators.classifier import (
         score_hashed_linear,
     )
@@ -749,112 +588,6 @@ def _classifier_kept(
         )
 
     return kept
-
-
-def curation_gate_batch_writer(
-    sink_dir: str,
-    weights: dict[int, float],
-    bias: float,
-    threshold: float,
-    *,
-    n_buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_gram: int = 1,
-):
-    """foreachBatch callback: score → filter → exactly-once commit.
-
-    Split out from ``start_curation_gate_stream`` (the J10 pattern) so
-    crash/replay tests can drive the protocol with synthetic batch
-    ids. The kept rows keep every input column plus ``score`` — the
-    audit trail a curation sink needs (why did this doc pass?).
-    """
-    return _scored_gate_writer(
-        sink_dir,
-        _classifier_kept(
-            weights, bias, threshold,
-            n_buckets=n_buckets, text_col=text_col, id_col=id_col,
-            n_gram=n_gram,
-        ),
-    )
-
-
-def start_curation_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    *,
-    weights: dict[int, float],
-    bias: float,
-    threshold: float,
-    cal_table: list | None = None,
-    curve_bins: int | None = None,
-    n_buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_gram: int = 1,
-    schema: str = DOC_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """J11: stream documents → E7 quality gate → exactly-once sink.
-
-    ``weights``/``bias``/``threshold`` come from the batch side —
-    ``train_hashed_linear`` + the PR-curve selection. The gate filters
-    RAW scores, so the meaning of ``threshold`` depends on how the
-    batch side selected it:
-
-    - uncalibrated manifest (``calibrate=False``): ``threshold`` is a
-      raw score — leave ``cal_table`` as None.
-    - calibrated manifest (``calibrate=True``): ``threshold`` is a
-      probability on the CALIBRATED scale; pass the manifest's
-      ``calibration_table`` as ``cal_table`` (+ its ``curve_bins``)
-      and the conversion through
-      ``classifier.calibrated_threshold_to_raw`` happens HERE. Feeding
-      a calibrated threshold without the table would silently apply
-      the wrong cut (the r14 ADVICE finding — previously only a
-      docstring warned), so the handoff is now an argument pair the
-      caller can't half-supply.
-
-    Not a ``transformWithState`` job on purpose: the model is static
-    per stream, scoring is stateless per-doc, so foreachBatch +
-    commit log is the whole machine.
-    """
-    threshold = _resolve_gate_threshold(threshold, cal_table, curve_bins)
-    return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            curation_gate_batch_writer(
-                sink_dir,
-                weights,
-                bias,
-                threshold,
-                n_buckets=n_buckets,
-                text_col=text_col,
-                id_col=id_col,
-                n_gram=n_gram,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# ---------------------------------------------------------------------------
-# J12 (r15 frontier) — the INCREMENTAL twin of the CCNet prefilter
-# (H49/H50 → H48), mirroring J11's relationship to the batch
-# classifier gate: documents stream in, each micro-batch is scored
-# under the FROZEN reference LM and cut at the FROZEN per-domain
-# thresholds from a ccnet_manifest, and survivors flow through the
-# J10 exactly-once commit log. This is how a continuous ingest keeps
-# a CCNet-prefiltered corpus current without nightly full re-scores:
-# the model (LM relation + threshold table) is fit ONCE on the batch
-# side and never refit per batch — a drifting corpus needs a new
-# batch fit and a new stream, which is the honest semantics (CCNet
-# thresholds are corpus-distribution quantiles; updating them
-# per-batch would make the cut depend on arrival order).
-# ---------------------------------------------------------------------------
 
 
 def _higher_order_tables(bigram, trigram, fourgram, fivegram) -> list:
@@ -881,21 +614,13 @@ def _higher_order_tables(bigram, trigram, fourgram, fivegram) -> list:
 
 
 def _validate_lm_order(
-    lm_order: int | None, bigram, trigram=None, fourgram=None,
-    fivegram=None,
+    lm_order: int, bigram, trigram=None, fourgram=None, fivegram=None,
 ) -> None:
-    """THE one copy of the manifest-vs-model order check shared by the
-    J12 and J13 stream starters (r15 ADVICE): thresholds fit at
-    lm_order=2 applied with ``bigram=None`` silently score order-1
-    and the streamed kept-set diverges from the batch cut — only
-    alpha/lam were documented. Pass the batch manifest's
-    ``lm_order``; ``None`` skips the check (a caller without a
-    manifest already chose the scorer by supplying the tables).
-    r16 extended the check to order 3; r17 to the generic chain's
-    order 5: the supplied tables must be EXACTLY the manifest's
-    order in both directions."""
-    if lm_order is None:
-        return
+    """THE one copy of the manifest-vs-model order check (r15
+    ADVICE): thresholds fit at lm_order=2 applied with
+    ``bigram=None`` silently score order-1 and the streamed kept-set
+    diverges from the batch cut. The supplied tables must be EXACTLY
+    the manifest's order (1 through 5) in both directions."""
     if lm_order not in (1, 2, 3, 4, 5):
         raise ValueError(
             f"lm_order={lm_order}: the streaming gates score order 1 "
@@ -927,8 +652,7 @@ def _check_ccnet_gate_inputs(
     thresholds, bigram, trigram, fourgram=None, fivegram=None
 ) -> None:
     """THE one copy of the CCNet gate's structural guards, shared by
-    the kept builder and both publishers (the text had been
-    copy-pasted three times — review catch)."""
+    the kept builder and both publishers."""
     if not thresholds:
         raise ValueError(
             "empty thresholds: fit the batch prefilter first — a "
@@ -955,10 +679,16 @@ def _ccnet_kept(
 ):
     """kept-of-batch builder for the frozen CCNet cut — THE one copy
     of the H49/H50/H52 scoring body, composed by J12 alone and by J13
-    ahead of the classifier gate (r15 review catch: the body had
-    been duplicated, so a fix to one writer would not reach the
-    other). Validates and empty-checks the frozen model HERE, once
-    per builder, never per micro-batch. The higher-order tables
+    ahead of the classifier gate. ``thresholds`` is the batch
+    manifest's {source: threshold} dict applied through
+    apply_domain_filter's pre-collected-rows path, so a document from
+    a domain the fit never saw fails fast exactly like the batch job.
+    Token-less docs drop (the H49 contract). Kept rows carry
+    n_toks/avg_nll as the audit trail.
+
+    The frozen model's validation probes (the OOV-row read; for the
+    chain also the vocab stats + same-reference anti-join) run HERE,
+    once per builder, never per micro-batch. The higher-order tables
     (r17: up to ``fivegram``) select the generic backoff chain at
     their order; each requires every lower order."""
     from drive_bc_datapipeline_spark.operators.domain_filter import (
@@ -1005,136 +735,6 @@ def _ccnet_kept(
     return kept
 
 
-def ccnet_gate_batch_writer(
-    sink_dir: str,
-    lm,
-    thresholds: dict[str, float],
-    q: float,
-    *,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
-    alpha: float = 0.5,
-    lam: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    rules_config: dict | None = None,
-):
-    """foreachBatch callback: LM-score → per-domain cut → exactly-once
-    commit. Split out (the J10/J11 pattern) so crash/replay tests can
-    drive the protocol with synthetic batch ids.
-
-    ``lm`` is the unigram_lm_table relation (pass ``bigram`` =
-    bigram_lm_table relation to score order-2 — same knobs as
-    run_ccnet_prefilter); ``thresholds`` is the manifest's
-    {source: threshold} dict applied through apply_domain_filter's
-    pre-collected-rows path, so a document from a domain the fit
-    never saw fails fast exactly like the batch job. Token-less docs
-    drop (the H49 contract — they scored nothing in the batch fit
-    either). Kept rows carry n_toks/avg_nll as the audit trail.
-
-    The frozen model's validation probes (the OOV-row read; for
-    bigram also the vocab stats + same-reference anti-join) run ONCE
-    here at writer build, not per micro-batch (r15 review catch) —
-    the lm/bigram relations never change for the writer's lifetime,
-    so per-batch work is exactly the H49/H50 scoring join shape.
-    """
-    kept = _ccnet_kept(
-        lm, thresholds, q, bigram=bigram, trigram=trigram,
-        fourgram=fourgram, fivegram=fivegram,
-        alpha=alpha, lam=lam,
-        text_col=text_col, id_col=id_col, source_col=source_col,
-    )
-    if rules_config is not None:
-        rules_kept = _rules_kept(text_col, rules_config)
-        inner = kept
-        kept = lambda df: inner(rules_kept(df))  # noqa: E731
-    return _scored_gate_writer(sink_dir, kept)
-
-
-def start_ccnet_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    *,
-    lm,
-    thresholds: dict[str, float],
-    q: float,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
-    alpha: float = 0.5,
-    lam: float = 0.7,
-    lm_order: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    rules_config: dict | None = None,
-    schema: str = DOC_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """J12: stream documents → frozen CCNet cut → exactly-once sink.
-
-    ``lm`` (+ optional ``bigram``) and ``thresholds``/``q`` come from
-    the batch side — ``unigram_lm_table``/``bigram_lm_table`` on the
-    reference corpus and ``run_ccnet_prefilter``'s manifest
-    (``m["thresholds"]``, ``m["q"]``) — so streamed and batch cuts
-    are THE SAME decision function, which the test pins
-    (streamed kept-set == the batch job's kept-set on the union).
-    Pass the SAME alpha/lam the manifest records when scoring
-    order-2, and the manifest's ``lm_order`` so a thresholds/model
-    order mismatch raises instead of silently scoring the wrong
-    order (the cal_table/curve_bins half-supply discipline). Not a
-    transformWithState job on purpose: the model is static per
-    stream, scoring is stateless per-doc, so foreachBatch + commit
-    log is the whole machine (the J11 argument).
-    """
-    _validate_lm_order(lm_order, bigram, trigram, fourgram, fivegram)
-    _check_ccnet_gate_inputs(thresholds, bigram, trigram, fourgram,
-                             fivegram)
-    return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            ccnet_gate_batch_writer(
-                sink_dir,
-                lm,
-                thresholds,
-                q,
-                bigram=bigram,
-                trigram=trigram,
-                fourgram=fourgram,
-                fivegram=fivegram,
-                alpha=alpha,
-                lam=lam,
-                text_col=text_col,
-                id_col=id_col,
-                source_col=source_col,
-                rules_config=rules_config,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# ---------------------------------------------------------------------------
-# J13 (r15) — the staged gate stream: run_staged_curation's filterable
-# prefix (CCNet LM cut → classifier quality gate) applied per
-# micro-batch through ONE commit log. DSIR/selection stay batch-side
-# on purpose: importance resampling against a target distribution is
-# corpus-level state — per-batch resampling would make the selection
-# depend on arrival order, the same argument that keeps J12's
-# thresholds frozen. A production ingest runs THIS stream to keep the
-# gated pool current and the batch DSIR/shard job on a schedule over
-# the pool.
-# ---------------------------------------------------------------------------
-
-
 def _rules_kept(text_col: str, config: dict):
     """Stage-0 kept builder: the H51 Gopher/C4 rule screen as a lazy
     codegen'd predicate over the batch (no shuffle, no join — it
@@ -1157,16 +757,16 @@ def _rules_kept(text_col: str, config: dict):
 
 
 def _staged_kept_of_batch(ccnet_kept, classifier_kept, rules_kept=None):
-    """THE one copy of the staged composition's per-batch shape,
-    shared by the plain J13 writer and its versioned twin: pin the
-    prefiltered relation (persist + eager count — one materialization
-    so the classifier stage's two consumers read the cache instead of
-    re-running the LM joins; the releasable alternative to
-    localCheckpoint, r15 ADVICE) and hand it back as aux so the
-    shared writer releases it after the commit. A raise between the
-    persist and the writer's try/finally would leave the pin behind
-    (the r15 ADVICE accumulation class, one level earlier) — release
-    and re-raise here."""
+    """THE one copy of the J13 staged composition's per-batch shape:
+    pin the prefiltered relation (persist + eager count — one
+    materialization so the classifier stage's two consumers, score +
+    join-back, read the cache instead of re-running the LM joins ~3x
+    per micro-batch) and hand it back as aux so the gate writer
+    releases it after the commit. persist rather than
+    localCheckpoint (r15 ADVICE): checkpoint blocks have no release
+    hook and would accumulate executor storage over a long-running
+    stream. A raise between the persist and the writer's try/finally
+    would leave the pin behind — release and re-raise here."""
 
     def kept_of_batch(batch_df: DataFrame):
         if rules_kept is not None:
@@ -1182,152 +782,11 @@ def _staged_kept_of_batch(ccnet_kept, classifier_kept, rules_kept=None):
     return kept_of_batch
 
 
-def staged_gate_batch_writer(
-    sink_dir: str,
-    lm,
-    thresholds: dict[str, float],
-    q: float,
-    weights: dict[int, float],
-    bias: float,
-    threshold: float,
-    *,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
-    alpha: float = 0.5,
-    lam: float = 0.7,
-    n_buckets: int = 4096,
-    n_gram: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    rules_config: dict | None = None,
-):
-    """foreachBatch callback: CCNet cut → classifier gate →
-    exactly-once commit — the literal COMPOSITION of the J12 and J11
-    kept-of-batch builders over the ONE shared replay protocol
-    (r15 review catch: the first version copy-pasted both bodies, so
-    a fix to either gate would not have reached this one). Batch
-    equivalence: the kept set equals running the batch prefilter's
-    cut then the batch classifier gate on the survivors
-    (test-pinned). Kept rows carry BOTH audit trails: n_toks/avg_nll
-    from the LM cut and score from the classifier.
-
-    ``threshold`` is RAW here (the J11 writer contract) — the
-    calibrated handoff resolves in ``start_staged_gate_stream`` via
-    the shared ``_resolve_gate_threshold``, exactly like J11.
-
-    The prefiltered relation is persisted per batch and eagerly
-    materialized: the classifier stage consumes it twice (score +
-    join-back), and without the pin the LM scoring joins would
-    re-execute ~3x per micro-batch (r15 review catch — the same
-    re-scan class the batch jobs eliminate with their checkpoint).
-    persist + the writer's aux-unpersist protocol rather than
-    localCheckpoint (r15 ADVICE): checkpoint blocks have no release
-    hook and would linger on executors until the driver GC'd the
-    reference, accumulating storage over a long-running stream.
-    """
-    ccnet_kept = _ccnet_kept(
-        lm, thresholds, q, bigram=bigram, trigram=trigram,
-        fourgram=fourgram, fivegram=fivegram,
-        alpha=alpha, lam=lam,
-        text_col=text_col, id_col=id_col, source_col=source_col,
-    )
-    classifier_kept = _classifier_kept(
-        weights, bias, threshold,
-        n_buckets=n_buckets, text_col=text_col, id_col=id_col,
-        n_gram=n_gram,
-    )
-    return _scored_gate_writer(
-        sink_dir,
-        _staged_kept_of_batch(
-            ccnet_kept,
-            classifier_kept,
-            rules_kept=(
-                _rules_kept(text_col, rules_config)
-                if rules_config is not None
-                else None
-            ),
-        ),
-    )
-
-
-def start_staged_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    *,
-    lm,
-    thresholds: dict[str, float],
-    q: float,
-    weights: dict[int, float],
-    bias: float,
-    threshold: float,
-    bigram=None,
-    trigram=None,
-    fourgram=None,
-    fivegram=None,
-    alpha: float = 0.5,
-    lam: float = 0.7,
-    lm_order: int | None = None,
-    cal_table: list | None = None,
-    curve_bins: int | None = None,
-    n_buckets: int = 4096,
-    n_gram: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    rules_config: dict | None = None,
-    schema: str = DOC_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """J13: stream documents → frozen CCNet cut → frozen classifier
-    gate → exactly-once sink — ``run_staged_curation``'s filterable
-    prefix, incremental. Model state comes from the staged manifest:
-    the prefilter half (``m["prefilter"]["thresholds"]``/``["q"]`` +
-    the LM re-fit on the same reference, with its ``lm_order`` passed
-    through so a model/thresholds order mismatch raises) and the gate
-    half (the trained weights/bias and the curation manifest's
-    threshold, calibrated or raw). Everything is frozen per stream —
-    see J12's docstring for why refitting per batch would be wrong.
-    The calibrated handoff resolves here through the same
-    ``_resolve_gate_threshold`` J11 uses (same half-supply guards).
-    ``rules_config`` (r17): pass the staged manifest's value when the
-    batch job ran ``rules=True`` — the stage-0 screen is part of the
-    decision function, so a stream without it keeps rule-failing docs
-    the batch cut dropped (``None`` = batch ran without rules).
-    """
-    _validate_lm_order(lm_order, bigram, trigram, fourgram, fivegram)
-    threshold = _resolve_gate_threshold(threshold, cal_table, curve_bins)
-    return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            staged_gate_batch_writer(
-                sink_dir, lm, thresholds, q, weights, bias, threshold,
-                bigram=bigram, trigram=trigram,
-                fourgram=fourgram, fivegram=fivegram,
-                alpha=alpha, lam=lam,
-                n_buckets=n_buckets, n_gram=n_gram,
-                text_col=text_col, id_col=id_col,
-                source_col=source_col, rules_config=rules_config,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 # ---------------------------------------------------------------------------
-# J14 (r16) — model-rotation protocol for the frozen streaming gates
-# (the r15 verdict's What's-missing #5): the J11/J12/J13 gates freeze
-# their model per stream on purpose (per-batch refits would make the
-# cut arrival-order-dependent), so a drifted corpus needs a NEW batch
-# fit — and until now that meant a stop-the-world stream restart.
-# The protocol here hands an in-flight sink to the new model at
-# exactly a micro-batch boundary:
+# J14 (r16) — the versioned-model protocol every gate stream runs on.
+# A drifted corpus needs a NEW batch fit; the protocol hands an
+# in-flight sink to the new model at exactly a micro-batch boundary
+# instead of a stop-the-world restart:
 #
 #   model_dir/gate_model_v{N}.json   immutable versioned manifests
 #   model_dir/CURRENT                the pointer, swapped by atomic
@@ -1335,13 +794,14 @@ def start_staged_gate_stream(
 #                                    atomicity point the commit log
 #                                    already relies on
 #
-# The versioned writer resolves CURRENT once per micro-batch, AFTER
-# the replay-marker probe (a replayed committed batch never reads the
-# version) and BEFORE any scoring plan is built; the kept rows carry
-# a ``model_version`` audit column so every committed row names the
+# The gate writer resolves CURRENT once per micro-batch, AFTER the
+# replay-marker probe (a replayed committed batch never reads the
+# version) and BEFORE any scoring plan is built; the kept rows carry a
+# ``model_version`` audit column so every committed row names the
 # model that passed it. A version change rebuilds the kept builder
 # exactly once (the frozen model-state probes re-run per VERSION, not
-# per batch — the J12 probe-once discipline survives rotation).
+# per batch). A gate that never rotates is a gate with one published
+# version.
 #
 # Semantics note (documented, test-pinned): a crash-window REWRITE
 # (marker removed, batch re-driven) scores under the version CURRENT
@@ -1372,8 +832,8 @@ def _publish_gate_version(
     model_dir: str, version: int, manifest: dict
 ) -> int:
     """Write the immutable manifest for ``version`` and swap CURRENT
-    to it by atomic rename — THE one copy of the swap (shared by the
-    plain and the CCNet publishers)."""
+    to it by atomic rename — THE one copy of the swap (shared by all
+    three publishers)."""
     import json
     import os
 
@@ -1396,8 +856,8 @@ def publish_gate_model(model_dir: str, manifest: dict) -> int:
     ``gate_model_v{N}.json`` (N = one past the highest existing
     version), then swap ``CURRENT`` to it by atomic rename. Returns
     the version number. The batch re-fit job calls this after
-    training; every in-flight versioned stream picks the new model
-    up at its next micro-batch boundary."""
+    training; every in-flight gate stream picks the new model up at
+    its next micro-batch boundary."""
     return _publish_gate_version(
         model_dir, _next_gate_version(model_dir), manifest
     )
@@ -1423,35 +883,66 @@ def read_current_gate_model(model_dir: str) -> tuple[int, dict]:
         return version, json.load(f)
 
 
-def versioned_gate_batch_writer(
-    sink_dir: str, model_dir: str, kept_builder
-):
-    """foreachBatch callback wrapping ANY gate family with the
-    rotation protocol: per batch, resolve CURRENT → (rebuild the kept
-    builder iff the version changed) → gate → stamp ``model_version``
-    on the kept rows → exactly-once commit, all through the shared
-    ``_scored_gate_writer`` replay protocol.
+def gate_batch_writer(sink_dir: str, model_dir: str, kept_builder):
+    """foreachBatch callback of every gate stream: marker probe →
+    resolve CURRENT → (rebuild the kept builder iff the version
+    changed) → gate → stamp ``model_version`` → exactly-once commit.
 
     ``kept_builder(manifest) -> kept_of_batch`` builds the frozen
     gate from a published manifest (its model-state validation probes
-    run once per VERSION); the returned kept_of_batch follows the
-    ``_scored_gate_writer`` contract (bare frame or (frame, aux))."""
-    cache: dict = {"version": None, "kept": None}
+    run once per VERSION). ``kept_of_batch(batch_df)`` returns either
+    a bare DataFrame or ``(DataFrame, aux)``, where ``aux`` holds
+    intermediate frames the builder persisted for intra-batch reuse;
+    they are released here alongside the kept frame.
 
-    def kept_of_batch(batch_df: DataFrame):
+    Built eagerly: the writer resolves CURRENT and builds the gate
+    NOW, so a missing model or a bad manifest raises before any
+    stream starts, and that build seeds the version cache (the first
+    batch does not re-probe). The family resolved here is pinned: a
+    later version of a different ``gate`` family raises at its batch
+    boundary, before any scoring or commit — the dispatch must never
+    silently change the sink's schema mid-stream.
+
+    Per batch the marker is probed FIRST (a replayed committed batch
+    builds no scoring plan), then the kept frame is persisted around
+    the commit's isEmpty probe + write so each fresh batch scores
+    ONCE."""
+    import os
+
+    base = exactly_once_batch_writer(sink_dir)
+    version, manifest = read_current_gate_model(model_dir)
+    family = manifest.get("gate")
+    cache = {"version": version, "kept": kept_builder(manifest)}
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if os.path.exists(commit_marker_path(sink_dir, batch_id)):
+            return
         version, manifest = read_current_gate_model(model_dir)
         if version != cache["version"]:
+            if manifest.get("gate") != family:
+                raise ValueError(
+                    f"gate model v{version} under {model_dir!r} is a "
+                    f"{manifest.get('gate')!r} gate but this stream "
+                    f"started as a {family!r} gate family: a family "
+                    "change rewrites the sink's schema — publish it "
+                    "to a new model_dir and start a new stream"
+                )
             cache["kept"] = kept_builder(manifest)
             cache["version"] = version
         out = cache["kept"](batch_df)
         kept, aux = out if isinstance(out, tuple) else (out, ())
-        return kept.withColumn("model_version", F.lit(version)), aux
+        kept = kept.withColumn("model_version", F.lit(version)).persist()
+        try:
+            base(kept, batch_id)
+        finally:
+            kept.unpersist()
+            for frame in aux:
+                frame.unpersist()
 
-    return _scored_gate_writer(sink_dir, kept_of_batch)
+    return write_batch
 
 
-#: Required keys of a J11 classifier-gate manifest (the versioned
-#: JSON twin of start_curation_gate_stream's argument list).
+#: Required keys of a J11 classifier-gate manifest.
 CLASSIFIER_GATE_MANIFEST_KEYS = (
     "weights", "bias", "threshold", "n_buckets", "n_gram",
 )
@@ -1469,9 +960,15 @@ def classifier_gate_manifest(
 ) -> dict:
     """Build the JSON-safe versioned manifest for the J11 classifier
     gate (JSON keys are strings, so bucket ids round-trip through
-    str — the reader converts back). The calibrated handoff travels
-    as the (cal_table, curve_bins) PAIR or not at all, the
-    _resolve_gate_threshold discipline."""
+    str — the reader converts back).
+
+    ``weights``/``bias``/``threshold`` come from the batch side —
+    ``train_hashed_linear`` + the PR-curve selection. An uncalibrated
+    fit passes a raw-score ``threshold``; a calibrated fit passes the
+    probability threshold WITH the manifest's ``calibration_table``
+    as ``cal_table`` and its ``curve_bins``, and the gate inverts it
+    through ``classifier.calibrated_threshold_to_raw``. The pair
+    travels together or not at all."""
     if (cal_table is None) != (curve_bins is None):
         raise ValueError(
             "cal_table and curve_bins travel together or not at all "
@@ -1495,10 +992,9 @@ def classifier_gate_manifest(
 def _classifier_kept_of_manifest(
     *, text_col: str = "text", id_col: str = "doc_id"
 ):
-    """kept_builder for ``versioned_gate_batch_writer``: validate a
-    published classifier-gate manifest and build the frozen J11 gate
-    from it (threshold resolved through the shared calibrated-handoff
-    path)."""
+    """kept_builder for the J11 classifier gate: validate a published
+    manifest and build the frozen gate from it (threshold resolved
+    through the shared calibrated-handoff path)."""
 
     def build(manifest: dict):
         from drive_bc_datapipeline_spark.operators.classifier import (
@@ -1533,45 +1029,7 @@ def _classifier_kept_of_manifest(
     return build
 
 
-def start_versioned_curation_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    model_dir: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    schema: str = DOC_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """J14: the J11 classifier gate under the rotation protocol — the
-    model comes from ``model_dir``'s CURRENT manifest instead of
-    arguments, re-resolved at every micro-batch boundary, and every
-    kept row carries ``model_version``. A re-fit batch job publishes
-    v2 with ``publish_gate_model`` and the in-flight stream swaps
-    over without a restart. Fails at start when nothing is published
-    (a gate with no model has no cut to apply)."""
-    read_current_gate_model(model_dir)  # fail-fast before the stream
-    return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            versioned_gate_batch_writer(
-                sink_dir,
-                model_dir,
-                _classifier_kept_of_manifest(
-                    text_col=text_col, id_col=id_col
-                ),
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-#: Required keys of a J12 CCNet-gate manifest (the versioned twin of
-#: start_ccnet_gate_stream's argument list; LM relations travel as
+#: Required keys of a J12 CCNet-gate manifest (LM relations travel as
 #: parquet PATHS — vocabulary-bounded tables, written by the
 #: publisher, re-read once per version by the builder).
 CCNET_GATE_MANIFEST_KEYS = (
@@ -1593,20 +1051,20 @@ def publish_ccnet_gate_model(
     fivegram=None,
     rules_config: dict | None = None,
 ) -> int:
-    """Publish a CCNet gate model under the rotation protocol: the
-    vocabulary-bounded LM relations land as parquet under
-    ``model_dir/ccnet_v{N}/`` FIRST, then the manifest referencing
-    them swaps in atomically — an in-flight stream can never resolve
-    a version whose tables are still being written. ``thresholds``/
-    ``q``/``alpha``/``lam`` come from the batch prefilter's manifest;
-    ``lm_order`` is derived from the supplied tables (the
-    _validate_lm_order contract, so manifest and tables cannot
-    disagree at birth). ``rules_config`` (r17): the batch
-    prefilter's stage-0 rule screen, recorded so a rotated stream
-    applies THE SAME screen (``None`` = the batch ran without
-    rules; ``{}`` = rules on at the Gopher defaults)."""
-    import os
-
+    """Publish a J12 CCNet gate model: the vocabulary-bounded LM
+    relations land as parquet under ``model_dir/ccnet_v{N}/`` FIRST,
+    then the manifest referencing them swaps in atomically — an
+    in-flight stream can never resolve a version whose tables are
+    still being written. ``lm`` is the ``unigram_lm_table`` relation
+    (+ optional higher orders) fit on the reference corpus;
+    ``thresholds``/``q``/``alpha``/``lam`` come from the batch
+    prefilter's manifest, so streamed and batch cuts are THE SAME
+    decision function. ``lm_order`` is derived from the supplied
+    tables (the _validate_lm_order contract, so manifest and tables
+    cannot disagree at birth). ``rules_config`` (r17): the batch
+    prefilter's stage-0 rule screen, recorded so the stream applies
+    THE SAME screen (``None`` = the batch ran without rules; ``{}`` =
+    rules on at the Gopher defaults)."""
     _check_ccnet_gate_inputs(thresholds, bigram, trigram, fourgram,
                              fivegram)
     version = _next_gate_version(model_dir)
@@ -1637,7 +1095,7 @@ def _write_ccnet_tables(
 ) -> dict:
     """Write the vocabulary-bounded LM tables under the version dir
     and return the CCNet manifest half referencing them — THE one
-    copy shared by the plain and the staged publishers. Tables land
+    copy shared by the CCNet and the staged publishers. Tables land
     BEFORE the caller's manifest swap."""
     import os
 
@@ -1674,11 +1132,11 @@ def _ccnet_kept_of_manifest(
     id_col: str = "doc_id",
     source_col: str = "source",
 ):
-    """kept_builder for ``versioned_gate_batch_writer``: validate a
-    published CCNet-gate manifest, re-read its vocabulary-bounded LM
-    tables (once per VERSION — the builder runs on version change
-    only), and build the frozen J12 cut through the shared
-    ``_ccnet_kept`` body (its model probes also run here, once)."""
+    """kept_builder for the J12 CCNet gate: validate a published
+    manifest, re-read its vocabulary-bounded LM tables (once per
+    VERSION — the builder runs on version change only), and build the
+    frozen cut through the shared ``_ccnet_kept`` body (its model
+    probes also run here, once)."""
 
     def build(manifest: dict):
         missing = [
@@ -1722,47 +1180,6 @@ def _ccnet_kept_of_manifest(
         return lambda df: kept(rules_kept(df))
 
     return build
-
-
-def start_versioned_ccnet_gate_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    model_dir: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    schema: str = DOC_STREAM_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """J12 under the rotation protocol: the frozen CCNet cut comes
-    from ``model_dir``'s CURRENT manifest (LM tables re-read and
-    re-probed once per version), re-resolved at every micro-batch
-    boundary; every kept row carries ``model_version`` alongside the
-    n_toks/avg_nll audit trail. A re-fit batch prefilter publishes
-    the new tables + thresholds with ``publish_ccnet_gate_model`` and
-    the in-flight stream swaps over without a restart."""
-    read_current_gate_model(model_dir)  # fail-fast before the stream
-    return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            versioned_gate_batch_writer(
-                sink_dir,
-                model_dir,
-                _ccnet_kept_of_manifest(
-                    spark,
-                    text_col=text_col,
-                    id_col=id_col,
-                    source_col=source_col,
-                ),
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def publish_staged_gate_model(
@@ -1832,7 +1249,7 @@ def _staged_kept_of_manifest(
     id_col: str = "doc_id",
     source_col: str = "source",
 ):
-    """kept_builder for the versioned staged gate: both halves build
+    """kept_builder for the J13 staged gate: both halves build
     through their own manifest builders (model probes once per
     version) and compose through the ONE staged per-batch shape."""
     ccnet_build = _ccnet_kept_of_manifest(
@@ -1863,7 +1280,41 @@ def _staged_kept_of_manifest(
     return build
 
 
-def start_versioned_staged_gate_stream(
+def _gate_kept_of_manifest(
+    spark: SparkSession,
+    *,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    source_col: str = "source",
+):
+    """THE kept_builder of ``start_gate_stream``: dispatch a published
+    manifest to its family's builder by ``manifest["gate"]``."""
+    builders = {
+        "classifier": _classifier_kept_of_manifest(
+            text_col=text_col, id_col=id_col
+        ),
+        "ccnet": _ccnet_kept_of_manifest(
+            spark, text_col=text_col, id_col=id_col, source_col=source_col
+        ),
+        "staged": _staged_kept_of_manifest(
+            spark, text_col=text_col, id_col=id_col, source_col=source_col
+        ),
+    }
+
+    def build(manifest: dict):
+        gate = manifest.get("gate")
+        if gate not in builders:
+            raise ValueError(
+                f"unknown gate family {gate!r}: publish with "
+                "classifier_gate_manifest + publish_gate_model, "
+                "publish_ccnet_gate_model or publish_staged_gate_model"
+            )
+        return builders[gate](manifest)
+
+    return build
+
+
+def start_gate_stream(
     spark: SparkSession,
     source_dir: str,
     sink_dir: str,
@@ -1876,26 +1327,35 @@ def start_versioned_staged_gate_stream(
     schema: str = DOC_STREAM_SCHEMA,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
-    """J13 under the rotation protocol: the full staged cut (CCNet
-    prefilter → classifier gate) from ``model_dir``'s CURRENT
-    manifest, both halves swapping TOGETHER at a micro-batch
-    boundary; kept rows carry all three audit trails
-    (n_toks/avg_nll, score, model_version)."""
-    read_current_gate_model(model_dir)  # fail-fast before the stream
+    """THE gate stream: documents → the gate described by
+    ``model_dir``'s CURRENT manifest (J11 classifier, J12 CCNet or J13
+    staged) → exactly-once sink. Every kept row carries its family's audit
+    columns (``score``; ``n_toks``/``avg_nll``; both for staged) plus
+    ``model_version``.
+
+    The model is resolved and built HERE, before the stream starts:
+    nothing published, a half-supplied calibrated handoff, an
+    ``lm_order`` that disagrees with the stored tables, empty
+    thresholds and a bad ``n_gram`` all raise from this call. A
+    re-fit batch job publishes the next version and the running
+    stream swaps over at its next micro-batch boundary; the gate
+    family is pinned at start (see ``gate_batch_writer``).
+
+    ``max_files_per_trigger`` bounds micro-batch size — the file-source
+    equivalent of a per-shard read cap."""
+    writer = gate_batch_writer(
+        sink_dir,
+        model_dir,
+        _gate_kept_of_manifest(
+            spark, text_col=text_col, id_col=id_col, source_col=source_col
+        ),
+    )
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return (
-        _doc_stream_reader(spark, source_dir, schema, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            versioned_gate_batch_writer(
-                sink_dir,
-                model_dir,
-                _staged_kept_of_manifest(
-                    spark,
-                    text_col=text_col,
-                    id_col=id_col,
-                    source_col=source_col,
-                ),
-            )
-        )
+        reader.parquet(source_dir)
+        .writeStream.foreachBatch(writer)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -46,9 +46,7 @@ def test_etl_stream_foreachbatch(spark, tmp_path):
     """J1: stream → clean → foreachBatch date-partitioned parquet append."""
     src = _write_source(tmp_path)
     sink = str(tmp_path / "sink")
-    q = sp.start_etl_stream(
-        spark, src, sink, str(tmp_path / "ckpt"), available_now=True
-    )
+    q = sp.start_etl_stream(spark, src, sink, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     out = spark.read.parquet(sink)
@@ -65,7 +63,6 @@ def test_windowed_counts_stream_matches_batch(spark, tmp_path):
     src = _write_source(tmp_path)
     q = sp.start_windowed_counts_stream(
         spark, src, str(tmp_path / "ckpt2"), query_name="t_hourly",
-        available_now=True,
     )
     q.awaitTermination(120)
     streamed = {
@@ -117,7 +114,6 @@ def test_stateful_user_stats_matches_batch(spark, tmp_path):
     src = _write_source(tmp_path)
     q = sp.start_stateful_user_stats_stream(
         spark, src, str(tmp_path / "ckpt4"), query_name="t_stats",
-        available_now=True,
     )
     q.awaitTermination(120)
     # update mode may emit a row per micro-batch per key; last emission
@@ -169,7 +165,6 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
 
     q = sp.start_stream_stream_join(
         spark, str(src), str(tmp_path / "ssj_ckpt"), query_name="t_ssj",
-        available_now=True,
     )
     q.awaitTermination(120)
     got = {
@@ -187,7 +182,6 @@ def test_stream_static_enrichment(spark, tmp_path):
     )
     q = sp.start_enriched_stream(
         spark, src, dim, str(tmp_path / "ckpt5"), query_name="t_enrich",
-        available_now=True,
     )
     q.awaitTermination(120)
     rows = {r.event_id: r.tier for r in spark.sql(
@@ -197,58 +191,11 @@ def test_stream_static_enrichment(spark, tmp_path):
     assert rows["e2"] == "silver"
 
 
-def test_tws_user_stats_matches_batch(spark, tmp_path):
-    """J8: transformWithStateInPandas running totals == batch groupBy
-    (and == the J4 applyInPandasWithState semantics)."""
-    pytest.importorskip(
-        "google.protobuf", reason="TWS worker protocol needs protobuf"
-    )
-    src = _write_source(tmp_path)
-    q = sp.start_tws_user_stats_stream(
-        spark, src, str(tmp_path / "ckpt_tws"), query_name="t_tws",
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    streamed = {
-        r.user_id: (r.n_events, r.total_value, r.last_ts)
-        for r in spark.sql("SELECT * FROM t_tws").orderBy("n_events").collect()
-    }
-    batch = (
-        spark.read.schema(sp.RAW_EVENT_SCHEMA).json(src)
-        .dropna(subset=["ts"])
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").alias("tot"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-    expected = {
-        r.user_id: (r.n, float(r.tot), r.last_ts) for r in batch.collect()
-    }
-    assert streamed == expected
-
-
-def test_tws_gate_points_to_j4_fallback(spark, tmp_path):
-    """Without protobuf the J8 starter must fail FAST with a pointer to
-    the J4 fallback — not crash the streaming worker mid-query."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        pytest.skip("protobuf present: gate inactive")
-    except ImportError:
-        pass
-    with pytest.raises(ImportError, match="applyInPandasWithState"):
-        sp.start_tws_user_stats_stream(
-            spark, str(tmp_path), str(tmp_path / "ck"), query_name="x"
-        )
-
-
 def test_session_window_stream_matches_batch(spark, tmp_path):
     """J9: streaming session_window merge == batch session_window."""
     src = _write_source(tmp_path)
     q = sp.start_session_window_stream(
         spark, src, str(tmp_path / "ckpt9"), query_name="t_sessions",
-        available_now=True,
     )
     q.awaitTermination(120)
     streamed = {
@@ -341,11 +288,135 @@ def test_exactly_once_crash_replay_protocol(spark, tmp_path):
     assert sp.read_committed(spark, sink).count() == 10
 
 
+# A child process runs the J10 sink and SIGKILLs itself at one point of
+# the commit protocol. The kill is planted by patching os.rename/open
+# in the child only; the product code has no hook.
+_KILL_CHILD = r"""
+import builtins, os, signal, sys
+
+mode, src, sink, ckpt = sys.argv[1:]
+real_rename, real_open = os.rename, builtins.open
+
+
+def die():
+    os.kill(os.getpid(), signal.SIGKILL)
+
+
+def rename(a, b, *args, **kw):
+    if "_tmp_batch_" in str(a) and mode == "before_rename":
+        die()
+    real_rename(a, b, *args, **kw)
+    if "_tmp_batch_" in str(a) and mode == "before_marker":
+        die()
+
+
+def open_(path, mode_="r", *args, **kw):
+    f = real_open(path, mode_, *args, **kw)
+    marker = str(path).startswith(os.path.join(sink, "_commits") + os.sep)
+    if marker and "w" in mode_ and mode == "before_offset_commit":
+        die()  # the marker file exists; Spark has not committed
+    return f
+
+
+os.rename, builtins.open = rename, open_
+from drive_bc_datapipeline_spark.session import get_spark
+from drive_bc_datapipeline_spark.streaming import pipeline as sp
+
+spark = get_spark("kill9", master="local[1]", shuffle_partitions=1)
+sp.start_exactly_once_sink(spark, src, sink, ckpt).awaitTermination(120)
+sys.exit(3)  # reaching here means the kill point never fired
+"""
+
+
+def _run_killed_child(mode, src, sink, ckpt):
+    """Run the sink in a child process that SIGKILLs itself at
+    ``mode``; return its exit code. The child's whole process group
+    (its Spark JVM included) is killed before returning."""
+    import os
+    import signal
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = str(Path(__file__).resolve().parents[1])
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(
+            [root] + [p for p in [os.environ.get("PYTHONPATH")] if p]
+        ),
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    child = subprocess.Popen(
+        [sys.executable, "-c", _KILL_CHILD, mode, src, sink, ckpt],
+        cwd=root, env=env, start_new_session=True,
+        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+    )
+    try:
+        return child.wait(timeout=180)
+    finally:
+        try:
+            os.killpg(child.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+        child.wait()
+
+
+def test_exactly_once_survives_process_kill(spark, tmp_path):
+    """Exactly-once across a real SIGKILL of the driver process at each
+    crash window of the commit protocol: after the tmp write (before
+    the rename), after the rename (before the marker), and after the
+    marker (before Spark's offset commit). Restarting the sink on the
+    same checkpoint commits every clean row exactly once."""
+    import os
+
+    src = tmp_path / "k_src"
+    src.mkdir()
+    for i in range(3):
+        (src / f"part{i}.json").write_text("\n".join(
+            json.dumps({
+                "event_id": f"k{i}_{j}", "ts": f"2024-01-0{i + 1}T0{j}:00:00",
+                "user_id": f"u{j}", "event_type": "click",
+                "value": float(j), "props": '{"k": %d}' % j,
+            })
+            for j in range(4)
+        ))
+    want = sorted(
+        map(tuple, sp.clean_events(
+            spark.read.json(str(src), schema=sp.RAW_EVENT_SCHEMA)
+        ).select("event_id", "value", "k").collect())
+    )
+    for mode in ("before_rename", "before_marker", "before_offset_commit"):
+        sink, ckpt = str(tmp_path / mode), str(tmp_path / f"{mode}_ck")
+        assert _run_killed_child(mode, str(src), sink, ckpt) == -9, mode
+        # the kill landed where planted, and Spark never committed
+        tmp_left = os.path.isdir(os.path.join(sink, "_tmp_batch_0"))
+        renamed = os.path.isdir(os.path.join(sink, "batch=0"))
+        marked = os.path.exists(sp.commit_marker_path(sink, 0))
+        assert (tmp_left, renamed, marked) == {
+            "before_rename": (True, False, False),
+            "before_marker": (False, True, False),
+            "before_offset_commit": (False, True, True),
+        }[mode]
+        assert not os.path.exists(os.path.join(ckpt, "commits", "0"))
+
+        sp.start_exactly_once_sink(
+            spark, str(src), sink, ckpt
+        ).awaitTermination(120)
+        got = sorted(
+            map(tuple, sp.read_committed(spark, sink)
+                .select("event_id", "value", "k").collect())
+        )
+        assert got == want, mode
+        assert len({r[0] for r in got}) == len(got)  # no duplicate ids
+
+
 # ---------------------------------------------------------------------------
-# J11 — streaming curation gate (the incremental twin of the batch
+# J11 — streaming classifier gate (the incremental twin of the batch
 # E9→E10→E7 gate): per-micro-batch scoring is per-doc pure, so the
 # streamed kept-set must equal the batch gate on the union, and the
 # J10 commit protocol must close the replay window without re-scoring.
+# Every gate runs through start_gate_stream / gate_batch_writer over a
+# published model.
 # ---------------------------------------------------------------------------
 
 
@@ -384,6 +455,38 @@ def _write_doc_source(tmp_path, spark, n_files=3):
     return src
 
 
+def _gate_writer(spark, sink, publish, *args, **kw):
+    """Publish one gate model beside ``sink`` with ``publish`` and
+    return the gate writer over it — the seam replay tests drive with
+    synthetic batch ids."""
+    model_dir = sink + "_models"
+    publish(model_dir, *args, **kw)
+    return sp.gate_batch_writer(
+        sink, model_dir, sp._gate_kept_of_manifest(spark)
+    )
+
+
+def _republish(model_dir, edit):
+    """Publish CURRENT's manifest again after ``edit(manifest)`` — a
+    hand-rolled version the publishers' own guards would refuse."""
+    _v, manifest = sp.read_current_gate_model(model_dir)
+    edit(manifest)
+    sp.publish_gate_model(model_dir, manifest)
+    return model_dir
+
+
+def _assert_refused(spark, tmp_path, model_dir, match):
+    """start_gate_stream raises before any stream starts: the error
+    names the guard, and no checkpoint was ever created."""
+    ck = tmp_path / "refused_ck"
+    with pytest.raises(ValueError, match=match):
+        sp.start_gate_stream(
+            spark, str(tmp_path / "refused_src"),
+            str(tmp_path / "refused_sink"), str(ck), model_dir,
+        )
+    assert not ck.exists()
+
+
 def test_curation_gate_stream_matches_batch(spark, tmp_path):
     from drive_bc_datapipeline_spark.operators.classifier import (
         score_hashed_linear,
@@ -392,9 +495,12 @@ def test_curation_gate_stream_matches_batch(spark, tmp_path):
     w = _gate_model(spark)
     src = _write_doc_source(tmp_path, spark)
     sink = str(tmp_path / "gate_sink")
-    sp.start_curation_gate_stream(
-        spark, src, sink, str(tmp_path / "ck1"),
-        weights=w, bias=0.0, threshold=0.6, n_buckets=64,
+    model_dir = str(tmp_path / "models")
+    sp.publish_gate_model(
+        model_dir, sp.classifier_gate_manifest(w, 0.0, 0.6, n_buckets=64)
+    )
+    sp.start_gate_stream(
+        spark, src, sink, str(tmp_path / "ck1"), model_dir,
         max_files_per_trigger=1,  # force multiple micro-batches
     ).awaitTermination(120)
 
@@ -412,16 +518,17 @@ def test_curation_gate_stream_matches_batch(spark, tmp_path):
     )
     assert got == want
     assert len(got) > 0 and len(got) < len(DOCS)  # the gate did work
-    # kept rows carry every input column + the audit score
-    assert set(got_df.columns) == {"doc_id", "source", "text", "score"}
+    # kept rows carry every input column + the audit score + version
+    assert set(got_df.columns) == {
+        "doc_id", "source", "text", "score", "model_version"
+    }
     # only good-dominated docs clear sigmoid-land: ids 1, 3, 6
     assert [d for d, _s in got] == [1, 3, 6]
 
     # full replay with a fresh checkpoint (every batch id re-delivers)
     # changes nothing — exactly once end to end
-    sp.start_curation_gate_stream(
-        spark, src, sink, str(tmp_path / "ck2"),
-        weights=w, bias=0.0, threshold=0.6, n_buckets=64,
+    sp.start_gate_stream(
+        spark, src, sink, str(tmp_path / "ck2"), model_dir,
         max_files_per_trigger=1,
     ).awaitTermination(120)
     again = sorted(
@@ -439,8 +546,9 @@ def test_curation_gate_crash_replay_protocol(spark, tmp_path):
 
     w = _gate_model(spark)
     sink = str(tmp_path / "gate_sink")
-    write_batch = sp.curation_gate_batch_writer(
-        sink, w, 0.0, 0.6, n_buckets=64
+    write_batch = _gate_writer(
+        spark, sink, sp.publish_gate_model,
+        sp.classifier_gate_manifest(w, 0.0, 0.6, n_buckets=64),
     )
     df = spark.createDataFrame(DOCS, sp.DOC_STREAM_SCHEMA)
 
@@ -522,9 +630,12 @@ def test_curation_gate_stream_calibrated_handoff(spark, tmp_path):
 
     src = _write_doc_source(tmp_path, spark)
     sink = str(tmp_path / "cal_sink")
-    sp.start_curation_gate_stream(
-        spark, src, sink, str(tmp_path / "ck_cal"),
-        weights=w, bias=b, threshold=raw_t, n_buckets=64,
+    raw_models = str(tmp_path / "raw_models")
+    sp.publish_gate_model(
+        raw_models, sp.classifier_gate_manifest(w, b, raw_t, n_buckets=64)
+    )
+    sp.start_gate_stream(
+        spark, src, sink, str(tmp_path / "ck_cal"), raw_models,
         max_files_per_trigger=1,
     ).awaitTermination(120)
     got = sorted(
@@ -545,15 +656,20 @@ def test_curation_gate_stream_calibrated_handoff(spark, tmp_path):
     # the gate actually separated the corpus (not all-kept/all-drop)
     assert 0 < len(got) < len(DOCS)
 
-    # r15 (r14 ADVICE): the calibrated handoff as an ARGUMENT PAIR —
-    # pass the calibrated threshold + the manifest's calibration
-    # table and the stream performs the inversion itself; kept set
-    # identical to the hand-inverted run above
+    # r15 (r14 ADVICE): the calibrated handoff as a manifest PAIR —
+    # publish the calibrated threshold + the calibration table and the
+    # stream performs the inversion itself; kept set identical to the
+    # hand-inverted run above
     sink2 = str(tmp_path / "cal_sink2")
-    sp.start_curation_gate_stream(
-        spark, src, sink2, str(tmp_path / "ck_cal2"),
-        weights=w, bias=b, threshold=t_cal,
-        cal_table=table, curve_bins=n_bins, n_buckets=64,
+    cal_models = str(tmp_path / "cal_models")
+    sp.publish_gate_model(
+        cal_models,
+        sp.classifier_gate_manifest(
+            w, b, t_cal, cal_table=table, curve_bins=n_bins, n_buckets=64
+        ),
+    )
+    sp.start_gate_stream(
+        spark, src, sink2, str(tmp_path / "ck_cal2"), cal_models,
         max_files_per_trigger=1,
     ).awaitTermination(120)
     got2 = sorted(
@@ -561,36 +677,34 @@ def test_curation_gate_stream_calibrated_handoff(spark, tmp_path):
     )
     assert got2 == want
 
-    # half-supplying the handoff fails loudly where detectable: a
-    # curve_bins SMALLER than the fit leaves table bins out of range
-    # (the inversion's n_bins contract guard); too-large curve_bins is
-    # inherently undetectable from the table alone — the pair being
-    # one call site (instead of a docstring asking the caller to
-    # invert by hand) is the mitigation for that direction
-    import pytest as _pytest
-
+    # half-supplying the handoff fails loudly where detectable, before
+    # any stream starts: a curve_bins SMALLER than the fit leaves
+    # table bins out of range (the inversion's n_bins contract guard);
+    # too-large curve_bins is inherently undetectable from the table
+    # alone — the pair travelling in one manifest (instead of a
+    # docstring asking the caller to invert by hand) is the
+    # mitigation for that direction
     assert any(row[0] >= n_bins // 2 for row in table)  # guard fires
-    with _pytest.raises(ValueError, match="same n_bins"):
-        sp.start_curation_gate_stream(
-            spark, src, str(tmp_path / "bad"), str(tmp_path / "ck_bad"),
-            weights=w, bias=b, threshold=t_cal,
-            cal_table=table, curve_bins=n_bins // 2, n_buckets=64,
-        )
+    bad_models = str(tmp_path / "bad_models")
+    sp.publish_gate_model(
+        bad_models,
+        sp.classifier_gate_manifest(
+            w, b, t_cal, cal_table=table, curve_bins=n_bins // 2,
+            n_buckets=64,
+        ),
+    )
+    _assert_refused(spark, tmp_path, bad_models, "same n_bins")
     # ...and the undetectable direction (a defaulted/omitted
     # curve_bins larger than the fit would silently rescale the cut)
-    # is closed by refusing a half-supplied pair outright
-    with _pytest.raises(ValueError, match="without curve_bins"):
-        sp.start_curation_gate_stream(
-            spark, src, str(tmp_path / "bad2"), str(tmp_path / "ck_b2"),
-            weights=w, bias=b, threshold=t_cal,
-            cal_table=table, n_buckets=64,
-        )
-    with _pytest.raises(ValueError, match="without cal_table"):
-        sp.start_curation_gate_stream(
-            spark, src, str(tmp_path / "bad3"), str(tmp_path / "ck_b3"),
-            weights=w, bias=b, threshold=raw_t,
-            curve_bins=n_bins, n_buckets=64,
-        )
+    # is closed by refusing a half-supplied pair outright — even in a
+    # hand-rolled manifest that bypassed classifier_gate_manifest
+    _republish(bad_models, lambda m: m.update(curve_bins=None))
+    _assert_refused(spark, tmp_path, bad_models, "without curve_bins")
+    _republish(
+        bad_models,
+        lambda m: m.update(threshold=raw_t, cal_table=None, curve_bins=n_bins),
+    )
+    _assert_refused(spark, tmp_path, bad_models, "without cal_table")
 
 
 # ---------------------------------------------------------------------------
@@ -639,9 +753,12 @@ def test_ccnet_gate_stream_matches_batch(spark, tmp_path):
     docs.repartition(3).write.parquet(src)
     lm = unigram_lm_table(ref, alpha=m["alpha"])
     sink = str(tmp_path / "ccnet_sink")
-    sp.start_ccnet_gate_stream(
-        spark, src, sink, str(tmp_path / "ck_ccnet"),
-        lm=lm, thresholds=m["thresholds"], q=m["q"],
+    model_dir = str(tmp_path / "ccnet_models")
+    sp.publish_ccnet_gate_model(
+        model_dir, lm=lm, thresholds=m["thresholds"], q=m["q"]
+    )
+    sp.start_gate_stream(
+        spark, src, sink, str(tmp_path / "ck_ccnet"), model_dir,
         max_files_per_trigger=1,  # force multiple micro-batches
     ).awaitTermination(120)
     got = sorted(
@@ -675,7 +792,10 @@ def test_ccnet_gate_writer_replay_and_guards(spark, tmp_path):
     # thresholds high enough to keep the reference-like docs
     thresholds = {"web": 10.0, "book": 10.0}
     sink = str(tmp_path / "w_sink")
-    write_batch = sp.ccnet_gate_batch_writer(sink, lm, thresholds, 0.5)
+    write_batch = _gate_writer(
+        spark, sink, sp.publish_ccnet_gate_model,
+        lm=lm, thresholds=thresholds, q=0.5,
+    )
 
     write_batch(docs, 0)
     n0 = sp.read_committed(spark, sink).count()
@@ -696,11 +816,8 @@ def test_ccnet_gate_writer_replay_and_guards(spark, tmp_path):
         write_batch(stray, 1)
 
     # empty thresholds refused before any stream starts
-    with pytest.raises(ValueError, match="empty thresholds"):
-        sp.start_ccnet_gate_stream(
-            spark, str(tmp_path / "x"), str(tmp_path / "y"),
-            str(tmp_path / "z"), lm=lm, thresholds={}, q=0.5,
-        )
+    model_dir = _republish(sink + "_models", lambda m: m.update(thresholds={}))
+    _assert_refused(spark, tmp_path, model_dir, "empty thresholds")
 
 
 @pytest.mark.slow
@@ -736,8 +853,9 @@ def test_ccnet_gate_writer_bigram_arm(spark, tmp_path):
     lm = unigram_lm_table(ref, alpha=m["alpha"])
     bg = bigram_lm_table(ref)
     sink = str(tmp_path / "bg_sink")
-    write_batch = sp.ccnet_gate_batch_writer(
-        sink, lm, m["thresholds"], m["q"],
+    write_batch = _gate_writer(
+        spark, sink, sp.publish_ccnet_gate_model,
+        lm=lm, thresholds=m["thresholds"], q=m["q"],
         bigram=bg, alpha=m["alpha"], lam=m["lam"],
     )
     write_batch(docs, 0)
@@ -748,7 +866,8 @@ def test_ccnet_gate_writer_bigram_arm(spark, tmp_path):
 
 def test_ccnet_gate_writer_probes_model_once(spark, tmp_path, monkeypatch):
     """The frozen model's validation probes run ONCE at writer build,
-    not per micro-batch (r15 review catch)."""
+    not per micro-batch (r15 review catch) — the first batch reuses
+    the build that resolved the version."""
     import drive_bc_datapipeline_spark.operators.lm_score as lmm
     from drive_bc_datapipeline_spark.operators.lm_score import (
         unigram_lm_table,
@@ -772,8 +891,9 @@ def test_ccnet_gate_writer_probes_model_once(spark, tmp_path, monkeypatch):
         )[1],
     )
     docs = spark.createDataFrame(CCNET_DOCS, sp.DOC_STREAM_SCHEMA)
-    write_batch = sp.ccnet_gate_batch_writer(
-        str(tmp_path / "p_sink"), lm, {"web": 10.0, "book": 10.0}, 0.5
+    write_batch = _gate_writer(
+        spark, str(tmp_path / "p_sink"), sp.publish_ccnet_gate_model,
+        lm=lm, thresholds={"web": 10.0, "book": 10.0}, q=0.5,
     )
     assert calls == {"oov": 1, "stats": 0}  # probed at build
     write_batch(docs, 0)
@@ -856,12 +976,15 @@ def test_staged_gate_stream_matches_batch_prefix(spark, tmp_path):
     src_dir = str(tmp_path / "src")
     docs.repartition(3).write.parquet(src_dir)
     sink = str(tmp_path / "sink")
-    sp.start_staged_gate_stream(
-        spark, src_dir, sink, str(tmp_path / "ck"),
-        lm=lm, thresholds=m["prefilter"]["thresholds"],
+    model_dir = str(tmp_path / "models")
+    sp.publish_staged_gate_model(
+        model_dir, lm=lm, thresholds=m["prefilter"]["thresholds"],
         q=m["prefilter"]["q"],
-        weights=w, bias=b, threshold=mw["threshold"],
-        n_buckets=64, max_files_per_trigger=1,
+        weights=w, bias=b, threshold=mw["threshold"], n_buckets=64,
+    )
+    sp.start_gate_stream(
+        spark, src_dir, sink, str(tmp_path / "ck"), model_dir,
+        max_files_per_trigger=1,
     ).awaitTermination(120)
     got = sorted(
         r["doc_id"] for r in sp.read_committed(spark, sink).collect()
@@ -898,12 +1021,16 @@ def test_staged_gate_stream_matches_batch_prefix(spark, tmp_path):
     )
     raw_t = calibrated_threshold_to_raw(cal_table, t_cal, n_bins=n_bins)
     cal_sink = str(tmp_path / "cal_sink")
-    sp.start_staged_gate_stream(
-        spark, src_dir, cal_sink, str(tmp_path / "cal_ck"),
-        lm=lm, thresholds=m["prefilter"]["thresholds"],
+    cal_models = str(tmp_path / "cal_models")
+    sp.publish_staged_gate_model(
+        cal_models, lm=lm, thresholds=m["prefilter"]["thresholds"],
         q=m["prefilter"]["q"], weights=w, bias=b,
         threshold=t_cal, cal_table=cal_table, curve_bins=n_bins,
-        n_buckets=64, max_files_per_trigger=1,
+        n_buckets=64,
+    )
+    sp.start_gate_stream(
+        spark, src_dir, cal_sink, str(tmp_path / "cal_ck"), cal_models,
+        max_files_per_trigger=1,
     ).awaitTermination(120)
     got_cal = sorted(
         r["doc_id"]
@@ -918,23 +1045,12 @@ def test_staged_gate_stream_matches_batch_prefix(spark, tmp_path):
     )
     assert got_cal == want_cal and got_cal
 
-    # both half-supply guard directions compose here too
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="without cal_table"):
-        sp.start_staged_gate_stream(
-            spark, src_dir, str(tmp_path / "s2"), str(tmp_path / "c2"),
-            lm=lm, thresholds=m["prefilter"]["thresholds"],
-            q=m["prefilter"]["q"], weights=w, bias=b,
-            threshold=mw["threshold"], curve_bins=100, n_buckets=64,
-        )
-    with _pytest.raises(ValueError, match="without curve_bins"):
-        sp.start_staged_gate_stream(
-            spark, src_dir, str(tmp_path / "s3"), str(tmp_path / "c3"),
-            lm=lm, thresholds=m["prefilter"]["thresholds"],
-            q=m["prefilter"]["q"], weights=w, bias=b,
-            threshold=t_cal, cal_table=cal_table, n_buckets=64,
-        )
+    # both half-supply guard directions compose here too (hand-rolled
+    # staged manifests: the publisher itself refuses a half pair)
+    _republish(model_dir, lambda m: m["classifier"].update(curve_bins=100))
+    _assert_refused(spark, tmp_path, model_dir, "without cal_table")
+    _republish(cal_models, lambda m: m["classifier"].update(curve_bins=None))
+    _assert_refused(spark, tmp_path, cal_models, "without curve_bins")
 
 
 @pytest.mark.slow
@@ -969,8 +1085,10 @@ def test_staged_gate_writer_replay_protocol(spark, tmp_path):
         sp.DOC_STREAM_SCHEMA,
     )
     sink = str(tmp_path / "rp_sink")
-    write_batch = sp.staged_gate_batch_writer(
-        sink, lm, {"web": 50.0}, 0.9, w, b, 0.6, n_buckets=64
+    write_batch = _gate_writer(
+        spark, sink, sp.publish_staged_gate_model,
+        lm=lm, thresholds={"web": 50.0}, q=0.9,
+        weights=w, bias=b, threshold=0.6, n_buckets=64,
     )
     write_batch(docs, 0)
     n0 = sp.read_committed(spark, sink).count()
@@ -983,8 +1101,8 @@ def test_staged_gate_writer_replay_protocol(spark, tmp_path):
 
 
 def test_gate_stream_lm_order_guard(spark, tmp_path):
-    """r15 ADVICE: the J12/J13 starters accept the batch manifest's
-    lm_order and refuse a model/thresholds order mismatch in BOTH
+    """r15 ADVICE: a J12/J13 gate whose manifest lm_order disagrees
+    with its stored tables is refused at start_gate_stream in BOTH
     directions — thresholds fit at order 2 with no bigram table would
     silently score order-1 and diverge from the batch cut."""
     from drive_bc_datapipeline_spark.operators.classifier import (
@@ -1008,28 +1126,24 @@ def test_gate_stream_lm_order_guard(spark, tmp_path):
     )
     w, b = train_hashed_linear(spark, seeds, n_buckets=64, n_rounds=5)
 
-    def j12(**kw):
-        return sp.start_ccnet_gate_stream(
-            spark, str(tmp_path / "s"), str(tmp_path / "o"),
-            str(tmp_path / "c"), lm=lm, thresholds={"web": 50.0},
-            q=0.9, **kw,
-        )
+    def ccnet_half(m):
+        return m["ccnet"] if m["gate"] == "staged" else m
 
-    def j13(**kw):
-        return sp.start_staged_gate_stream(
-            spark, str(tmp_path / "s"), str(tmp_path / "o2"),
-            str(tmp_path / "c2"), lm=lm, thresholds={"web": 50.0},
-            q=0.9, weights=w, bias=b, threshold=0.6, n_buckets=64,
-            **kw,
-        )
+    def refused(model_dir, lm_order, match):
+        _republish(model_dir, lambda m: ccnet_half(m).update(lm_order=lm_order))
+        _assert_refused(spark, tmp_path, model_dir, match)
 
-    for start in (j12, j13):
-        with pytest.raises(ValueError, match="only order-1 tables"):
-            start(lm_order=2)
-        with pytest.raises(ValueError, match="order-2 tables were supplied"):
-            start(lm_order=1, bigram=bg)
-        with pytest.raises(ValueError, match="order 1"):
-            start(lm_order=7)
+    j13_kw = dict(weights=w, bias=b, threshold=0.6, n_buckets=64)
+    for name, publish, kw in (
+        ("j12", sp.publish_ccnet_gate_model, {}),
+        ("j13", sp.publish_staged_gate_model, j13_kw),
+    ):
+        uni, bi = str(tmp_path / f"{name}_o1"), str(tmp_path / f"{name}_o2")
+        publish(uni, lm=lm, thresholds={"web": 50.0}, q=0.9, **kw)
+        publish(bi, lm=lm, thresholds={"web": 50.0}, q=0.9, bigram=bg, **kw)
+        refused(uni, 2, "only order-1 tables")
+        refused(bi, 1, "order-2 tables were supplied")
+        refused(uni, 7, "order 1")
 
 
 @pytest.mark.slow
@@ -1062,8 +1176,10 @@ def test_staged_gate_writer_releases_prefiltered_storage(spark, tmp_path):
         sp.DOC_STREAM_SCHEMA,
     )
     sink = str(tmp_path / "rel_sink")
-    write_batch = sp.staged_gate_batch_writer(
-        sink, lm, {"web": 50.0}, 0.9, w, b, 0.6, n_buckets=64
+    write_batch = _gate_writer(
+        spark, sink, sp.publish_staged_gate_model,
+        lm=lm, thresholds={"web": 50.0}, q=0.9,
+        weights=w, bias=b, threshold=0.6, n_buckets=64,
     )
     def pinned_ids():
         m = spark.sparkContext._jsc.getPersistentRDDs()
@@ -1116,8 +1232,9 @@ def test_curation_gate_writer_n_gram_arm(spark, tmp_path):
     )
     assert batch_kept == [100, 101, 102, 103]
     sink = str(tmp_path / "ng_sink")
-    write_batch = sp.curation_gate_batch_writer(
-        sink, w, b, 0.5, n_buckets=256, n_gram=2
+    write_batch = _gate_writer(
+        spark, sink, sp.publish_gate_model,
+        sp.classifier_gate_manifest(w, b, 0.5, n_buckets=256, n_gram=2),
     )
     write_batch(docs, 0)
     got = sorted(
@@ -1165,7 +1282,7 @@ def test_gate_model_swap_at_batch_boundary(spark, tmp_path):
     )
     assert v1 == 1
     sink = str(tmp_path / "vsink")
-    write_batch = sp.versioned_gate_batch_writer(
+    write_batch = sp.gate_batch_writer(
         sink, model_dir, sp._classifier_kept_of_manifest()
     )
     write_batch(docs, 0)
@@ -1204,20 +1321,13 @@ def test_gate_model_version_resolved_once_per_batch(spark, tmp_path, monkeypatch
     """The pointer read happens once per micro-batch (after the
     replay-marker probe — a replayed batch never reads it), and the
     kept BUILDER rebuilds once per VERSION, not per batch (the J12
-    probe-once discipline survives rotation)."""
+    probe-once discipline survives rotation): the writer's own build
+    of the start version serves the first batches."""
     w, b, docs = _rotation_fixtures(spark)
     model_dir = str(tmp_path / "models")
     sp.publish_gate_model(
         model_dir, sp.classifier_gate_manifest(w, b, 0.6, n_buckets=64)
     )
-    reads = {"n": 0}
-    real_read = sp.read_current_gate_model
-
-    def counting_read(d):
-        reads["n"] += 1
-        return real_read(d)
-
-    monkeypatch.setattr(sp, "read_current_gate_model", counting_read)
     builds = {"n": 0}
     real_builder = sp._classifier_kept_of_manifest()
 
@@ -1226,9 +1336,17 @@ def test_gate_model_version_resolved_once_per_batch(spark, tmp_path, monkeypatch
         return real_builder(manifest)
 
     sink = str(tmp_path / "vsink2")
-    write_batch = sp.versioned_gate_batch_writer(
-        sink, model_dir, counting_builder
-    )
+    write_batch = sp.gate_batch_writer(sink, model_dir, counting_builder)
+    assert builds["n"] == 1  # built once, at writer build
+    # count the per-batch pointer reads from here on
+    reads = {"n": 0}
+    real_read = sp.read_current_gate_model
+
+    def counting_read(d):
+        reads["n"] += 1
+        return real_read(d)
+
+    monkeypatch.setattr(sp, "read_current_gate_model", counting_read)
     write_batch(docs, 0)
     write_batch(docs, 1)
     assert reads["n"] == 2 and builds["n"] == 1  # 2 batches, 1 version
@@ -1250,11 +1368,7 @@ def test_gate_model_publish_and_guards(spark, tmp_path):
     # reading before any publish fails by name
     with pytest.raises(ValueError, match="publish"):
         sp.read_current_gate_model(model_dir)
-    with pytest.raises(ValueError, match="publish"):
-        sp.start_versioned_curation_gate_stream(
-            spark, str(tmp_path / "s"), str(tmp_path / "o"),
-            str(tmp_path / "c"), model_dir,
-        )
+    _assert_refused(spark, tmp_path, model_dir, "publish")
     # the calibrated pair travels whole or not at all
     with pytest.raises(ValueError, match="pair"):
         sp.classifier_gate_manifest(w, b, 0.6, cal_table=[[0, 0.1]])
@@ -1285,7 +1399,7 @@ def test_versioned_gate_stream_end_to_end(spark, tmp_path):
     src = str(tmp_path / "vsrc")
     docs.write.parquet(src)
     sink = str(tmp_path / "vsink3")
-    sp.start_versioned_curation_gate_stream(
+    sp.start_gate_stream(
         spark, src, sink, str(tmp_path / "vck"), model_dir,
     ).awaitTermination(120)
     rows = sp.read_committed(spark, sink).collect()
@@ -1294,13 +1408,75 @@ def test_versioned_gate_stream_end_to_end(spark, tmp_path):
     assert all(r["score"] >= 0.6 for r in rows)  # both audit columns
 
 
+def test_gate_stream_pins_family_at_start(spark, tmp_path, monkeypatch):
+    """The version resolved at start fixes the gate family: a later
+    version of a different family (classifier v1, then CCNet v2 in
+    the same model_dir) raises at its batch boundary, before any
+    scoring or commit — the sink's schema never changes mid-stream."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from drive_bc_datapipeline_spark.operators.lm_score import (
+        unigram_lm_table,
+    )
+
+    w = _gate_model(spark)
+    docs = spark.createDataFrame(DOCS, sp.DOC_STREAM_SCHEMA)
+    lm = unigram_lm_table(spark.createDataFrame(
+        [(0, "good clean words")], "doc_id long, text string"
+    ))
+
+    def publish_v1_then_ccnet_v2(model_dir):
+        sp.publish_gate_model(
+            model_dir, sp.classifier_gate_manifest(w, 0.0, 0.6, n_buckets=64)
+        )
+        return lambda: sp.publish_ccnet_gate_model(
+            model_dir, lm=lm, thresholds={"web": 10.0, "book": 10.0}, q=0.5
+        )
+
+    # driven directly: batch 0 commits under v1, batch 1 meets v2
+    sink = str(tmp_path / "pin_sink")
+    publish_v2 = publish_v1_then_ccnet_v2(sink + "_models")
+    write_batch = sp.gate_batch_writer(
+        sink, sink + "_models", sp._gate_kept_of_manifest(spark)
+    )
+    write_batch(docs, 0)
+    assert publish_v2() == 2
+    with pytest.raises(ValueError, match="gate family"):
+        write_batch(docs, 1)
+    assert not os.path.exists(sp.commit_marker_path(sink, 1))
+    assert not {"batch=1", "_tmp_batch_1"} & set(os.listdir(sink))
+    rows = sp.read_committed(spark, sink).collect()
+    assert sorted(r["doc_id"] for r in rows) == [1, 3, 6]
+    assert {r["model_version"] for r in rows} == {1}
+
+    # the real stream: v2 lands after start resolved v1, before batch 0
+    src = _write_doc_source(tmp_path, spark)
+    model_dir = str(tmp_path / "pin_models")
+    publish_v2 = publish_v1_then_ccnet_v2(model_dir)
+    real_writer = sp.gate_batch_writer
+
+    def writer_then_refit(*args):
+        writer = real_writer(*args)  # start resolved and built v1
+        publish_v2()
+        return writer
+
+    monkeypatch.setattr(sp, "gate_batch_writer", writer_then_refit)
+    sink2 = str(tmp_path / "pin_sink2")
+    q = sp.start_gate_stream(
+        spark, src, sink2, str(tmp_path / "pin_ck"), model_dir
+    )
+    with pytest.raises(StreamingQueryException, match="gate family"):
+        q.awaitTermination(120)
+    assert not os.path.exists(os.path.join(sink2, "_commits"))
+
+
 @pytest.mark.slow
 def test_gate_manifest_validates_n_gram_at_build(spark, tmp_path):
     """Review catch: a bad feature order in a published manifest must
     fail when the version is first RESOLVED (once), not at the first
-    micro-batch's scoring plan."""
-    import pytest
-
+    micro-batch's scoring plan — so start_gate_stream refuses it."""
     w, b, _docs = _rotation_fixtures(spark)
     model_dir = str(tmp_path / "models")
     bad = sp.classifier_gate_manifest(w, b, 0.6, n_buckets=64)
@@ -1310,6 +1486,7 @@ def test_gate_manifest_validates_n_gram_at_build(spark, tmp_path):
     _v, manifest = sp.read_current_gate_model(model_dir)
     with pytest.raises(ValueError, match="n_gram"):
         build(manifest)
+    _assert_refused(spark, tmp_path, model_dir, "n_gram")
 
 
 def test_ccnet_gate_writer_trigram_arm(spark, tmp_path):
@@ -1347,8 +1524,9 @@ def test_ccnet_gate_writer_trigram_arm(spark, tmp_path):
     bg = bigram_lm_table(ref)
     tg = trigram_lm_table(ref)
     sink = str(tmp_path / "tg_sink")
-    write_batch = sp.ccnet_gate_batch_writer(
-        sink, lm, m["thresholds"], m["q"],
+    write_batch = _gate_writer(
+        spark, sink, sp.publish_ccnet_gate_model,
+        lm=lm, thresholds=m["thresholds"], q=m["q"],
         bigram=bg, trigram=tg, alpha=m["alpha"], lam=m["lam"],
     )
     write_batch(docs, 0)
@@ -1356,25 +1534,26 @@ def test_ccnet_gate_writer_trigram_arm(spark, tmp_path):
         r["doc_id"] for r in sp.read_committed(spark, sink).collect()
     ) == batch_kept
 
-    # order mismatch guards, both directions, through the starters
-    def j12(**kw):
-        return sp.start_ccnet_gate_stream(
-            spark, str(tmp_path / "s"), str(tmp_path / "o"),
-            str(tmp_path / "c"), lm=lm, thresholds=m["thresholds"],
-            q=m["q"], **kw,
-        )
-
-    with pytest.raises(ValueError, match="only order-2"):
-        j12(lm_order=3, bigram=bg)
-    with pytest.raises(ValueError, match="order-3 tables were supplied"):
-        j12(lm_order=2, bigram=bg, trigram=tg)
+    # order mismatch guards, both directions, at start_gate_stream
+    model_dir = sink + "_models"
+    bg_models = str(tmp_path / "bg_models")
+    sp.publish_ccnet_gate_model(
+        bg_models, lm=lm, thresholds=m["thresholds"], q=m["q"], bigram=bg
+    )
+    _republish(bg_models, lambda man: man.update(lm_order=3))
+    _assert_refused(spark, tmp_path, bg_models, "only order-2")
+    _republish(model_dir, lambda man: man.update(lm_order=2))
+    _assert_refused(spark, tmp_path, model_dir, "order-3 tables were supplied")
     with pytest.raises(ValueError, match="without its bigram"):
-        j12(lm_order=3, trigram=tg)
+        sp.publish_ccnet_gate_model(
+            str(tmp_path / "gap"), lm=lm, thresholds=m["thresholds"],
+            q=m["q"], trigram=tg,
+        )
     # the kept builder itself refuses a chain missing its middle
-    with pytest.raises(ValueError, match="without its bigram"):
-        sp.ccnet_gate_batch_writer(
-            str(tmp_path / "x"), lm, m["thresholds"], m["q"], trigram=tg
-        )
+    _republish(
+        model_dir, lambda man: man.update(lm_order=3, bigram_path=None)
+    )
+    _assert_refused(spark, tmp_path, model_dir, "without its bigram")
 
 
 @pytest.mark.slow
@@ -1445,8 +1624,10 @@ def test_staged_gate_writer_trigram_arm(spark, tmp_path):
 
     thresholds = {r["source"]: r["threshold"] for r in rows}
     sink = str(tmp_path / "stg_sink")
-    write_batch = sp.staged_gate_batch_writer(
-        sink, lm, thresholds, 0.4, w, b, 0.6,
+    write_batch = _gate_writer(
+        spark, sink, sp.publish_staged_gate_model,
+        lm=lm, thresholds=thresholds, q=0.4,
+        weights=w, bias=b, threshold=0.6,
         bigram=bg, trigram=tg, n_buckets=64,
     )
     write_batch(docs, 0)
@@ -1492,7 +1673,7 @@ def test_versioned_ccnet_gate_rotation(spark, tmp_path):
     )
     assert v1 == 1
     sink = str(tmp_path / "ccnet_vsink")
-    write_batch = sp.versioned_gate_batch_writer(
+    write_batch = sp.gate_batch_writer(
         sink, model_dir, sp._ccnet_kept_of_manifest(spark)
     )
     write_batch(docs, 0)
@@ -1546,11 +1727,7 @@ def test_versioned_ccnet_gate_guards_and_stream(spark, tmp_path):
         sp.publish_ccnet_gate_model(
             model_dir, lm=lm, thresholds={}, q=0.5
         )
-    with pytest.raises(ValueError, match="publish"):
-        sp.start_versioned_ccnet_gate_stream(
-            spark, str(tmp_path / "s"), str(tmp_path / "o"),
-            str(tmp_path / "c"), model_dir,
-        )
+    _assert_refused(spark, tmp_path, model_dir, "publish")
     # a hand-rolled manifest whose order disagrees with its stored
     # tables fails through the shared order check at build
     sp.publish_ccnet_gate_model(
@@ -1563,6 +1740,8 @@ def test_versioned_ccnet_gate_guards_and_stream(spark, tmp_path):
         build(manifest)
     with pytest.raises(ValueError, match="missing"):
         build({"gate": "ccnet"})
+    with pytest.raises(ValueError, match="unknown gate family"):
+        sp._gate_kept_of_manifest(spark)({"gate": "ngram"})
 
     # end-to-end: the real stream drains under CURRENT and stamps rows
     docs = spark.createDataFrame(
@@ -1572,7 +1751,7 @@ def test_versioned_ccnet_gate_guards_and_stream(spark, tmp_path):
     src = str(tmp_path / "vsrc")
     docs.write.parquet(src)
     sink = str(tmp_path / "vsink")
-    sp.start_versioned_ccnet_gate_stream(
+    sp.start_gate_stream(
         spark, src, sink, str(tmp_path / "vck"), model_dir,
     ).awaitTermination(120)
     rows = sp.read_committed(spark, sink).collect()
@@ -1611,7 +1790,7 @@ def test_ccnet_prefilter_publishes_gate_model(spark, tmp_path):
     assert manifest["lm_order"] == 3 and manifest["trigram_path"]
 
     sink = str(tmp_path / "pub_sink")
-    write_batch = sp.versioned_gate_batch_writer(
+    write_batch = sp.gate_batch_writer(
         sink, model_dir, sp._ccnet_kept_of_manifest(spark)
     )
     write_batch(docs, 0)
@@ -1665,7 +1844,7 @@ def test_versioned_staged_gate_rotation(spark, tmp_path):
     )
     assert v1 == 1
     sink = str(tmp_path / "staged_vsink")
-    write_batch = sp.versioned_gate_batch_writer(
+    write_batch = sp.gate_batch_writer(
         sink, model_dir, sp._staged_kept_of_manifest(spark)
     )
     write_batch(docs, 0)
@@ -1703,7 +1882,7 @@ def test_versioned_staged_gate_rotation(spark, tmp_path):
     src = str(tmp_path / "ssrc")
     docs.write.parquet(src)
     sink2 = str(tmp_path / "staged_vsink2")
-    sp.start_versioned_staged_gate_stream(
+    sp.start_gate_stream(
         spark, src, sink2, str(tmp_path / "sck"), model_dir,
     ).awaitTermination(120)
     got = sp.read_committed(spark, sink2).collect()
@@ -1750,7 +1929,7 @@ def test_curation_pipeline_publishes_gate_model(spark, tmp_path):
         sp.DOC_STREAM_SCHEMA,
     )
     sink = str(tmp_path / "cur_vsink")
-    write_batch = sp.versioned_gate_batch_writer(
+    write_batch = sp.gate_batch_writer(
         sink, model_dir, sp._classifier_kept_of_manifest()
     )
     write_batch(sdocs, 0)
@@ -1804,7 +1983,7 @@ def test_staged_curation_publishes_combined_model(spark, tmp_path):
         sp.DOC_STREAM_SCHEMA,
     )
     sink = str(tmp_path / "stg_vsink")
-    write_batch = sp.versioned_gate_batch_writer(
+    write_batch = sp.gate_batch_writer(
         sink, model_dir, sp._staged_kept_of_manifest(spark)
     )
     write_batch(sdocs, 0)
@@ -1820,7 +1999,7 @@ def test_staged_gate_rules_config_published_and_applied(spark, tmp_path):
     versioned staged gate APPLIES it — a rotated stream must not keep
     rule-failing docs the batch cut dropped. v1 (no rules) keeps the
     short docs; v2 (same LM + classifier, rules on) drops exactly
-    them; the plain J13 writer with rules_config matches v2; kept
+    them; a fresh sink published with rules_config matches v2; kept
     rows never carry flag columns."""
     from drive_bc_datapipeline_spark.jobs import run_staged_curation
     from drive_bc_datapipeline_spark.operators.classifier import (
@@ -1863,7 +2042,7 @@ def test_staged_gate_rules_config_published_and_applied(spark, tmp_path):
     )
     assert v1 == 1
     sink = str(tmp_path / "rules_vsink")
-    write_batch = sp.versioned_gate_batch_writer(
+    write_batch = sp.gate_batch_writer(
         sink, model_dir, sp._staged_kept_of_manifest(spark)
     )
     write_batch(docs, 0)
@@ -1887,11 +2066,12 @@ def test_staged_gate_rules_config_published_and_applied(spark, tmp_path):
     assert v2_kept == [0, 1, 2]  # the screen now rides the gate
     assert not set(rows[0].asDict()) & {"rules_ok", *RULE_FLAGS}
 
-    # the plain (argument-driven) J13 writer takes the same knob
+    # a fresh sink whose FIRST model carries the screen applies it
     sink2 = str(tmp_path / "rules_psink")
-    sp.staged_gate_batch_writer(
-        sink2, lm, m1["thresholds"], m1["q"], w, b, 0.5,
-        n_buckets=64, rules_config=cfg,
+    _gate_writer(
+        spark, sink2, sp.publish_staged_gate_model,
+        lm=lm, thresholds=m1["thresholds"], q=m1["q"],
+        weights=w, bias=b, threshold=0.5, n_buckets=64, rules_config=cfg,
     )(docs, 0)
     got = sorted(
         r["doc_id"]
@@ -1914,7 +2094,7 @@ def test_staged_gate_rules_config_published_and_applied(spark, tmp_path):
     _v, man2 = sp.read_current_gate_model(model_dir2)
     assert man2["rules_config"] == cfg
     sink3 = str(tmp_path / "rules_vsink3")
-    sp.versioned_gate_batch_writer(
+    sp.gate_batch_writer(
         sink3, model_dir2, sp._staged_kept_of_manifest(spark)
     )(docs, 0)
     got3 = sorted(
@@ -1962,7 +2142,7 @@ def test_ccnet_gate_order45_arms(spark, tmp_path):
     assert manifest["lm_order"] == 4
     assert manifest["fourgram_path"] and manifest["fivegram_path"] is None
     sink = str(tmp_path / "o4_sink")
-    sp.versioned_gate_batch_writer(
+    sp.gate_batch_writer(
         sink, model_dir, sp._ccnet_kept_of_manifest(spark)
     )(docs, 0)
     kept = sorted(

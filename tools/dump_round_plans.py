@@ -1,42 +1,44 @@
-"""Dump .explain('formatted') for every registry key into plans/r17/.
+"""Dump .explain('formatted') for registry keys into plans/r<N>/.
 
 Usage:
-    python tools/dump_r17_plans.py [suffix] [key ...]
+    python tools/dump_round_plans.py --round N [--suffix S] [key ...]
 
-Writes plans/r17/<key>_<suffix>.txt (suffix defaults to "before").
+Writes plans/r<N>/<key>_<suffix>.txt (suffix defaults to "before").
 With no keys given, dumps every registered key. Build-time side
 effects (eager localCheckpoints) run as usual; the dump is the
 ANALYZED/initial physical plan (AdaptiveSparkPlan isFinalPlan=false),
-which is what plan-shape claims in OPTIMIZATION_r17.md reference.
+which is what plan-shape claims in OPTIMIZATION_r<N>.md reference.
+SPARK_GRAFT_SF_DIR overrides the data directory (tables.DEFAULT_SF_DIR).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    suffix = args[0] if args else "before"
-    keys = args[1:]
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--round", type=int, required=True)
+    ap.add_argument("--suffix", default="before")
+    ap.add_argument("keys", nargs="*")
+    args = ap.parse_args()
 
     from drive_bc_datapipeline_spark.plans import registry
     from drive_bc_datapipeline_spark.session import get_spark
+    from drive_bc_datapipeline_spark.tables import DEFAULT_SF_DIR
 
     registry.load_all_plans()
-    names = keys or sorted(registry.QUERIES)
-    spark = get_spark("dump_r17_plans")
+    names = args.keys or sorted(registry.QUERIES)
+    spark = get_spark(f"dump_r{args.round}_plans")
     spark.sparkContext.setLogLevel("ERROR")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r17",
-    )
+    sf_dir = DEFAULT_SF_DIR
+    out_dir = os.path.join(ROOT, "plans", f"r{args.round}")
     os.makedirs(out_dir, exist_ok=True)
     try:
         for name in names:
@@ -48,9 +50,9 @@ def main() -> None:
                     "formatted"
                 )
             )
-            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+            path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
             with open(path, "w") as fh:
-                fh.write(f"-- {name} ({suffix}) sf_dir={sf_dir}\n")
+                fh.write(f"-- {name} ({args.suffix}) sf_dir={sf_dir}\n")
                 fh.write(f"-- plan-build wall: {build_s:.3f}s\n")
                 fh.write(plan)
             print(f"{name}: build {build_s:.3f}s -> {path}", file=sys.stderr)
